@@ -181,9 +181,11 @@ def minhash_candidates(
     operators.blocking.candidate_pairs) — a 1000-row bucket is ~KBs into
     the join but 500k pairs out, invisible to AQE's byte-based skew split.
 
-    `cache_handle`: WHEN SUPPLIED, the bands frame is persisted (it feeds
-    the bucket-count table AND both join sides, and the signature job is
-    the family's most expensive map stage) and appended to the list; the
+    `cache_handle`: WHEN SUPPLIED, the bands frame is persisted (the
+    signature job is the family's most expensive map stage, and a cached
+    frame serves every later plan over these candidates; within one plan
+    the bucket sizes and both join sides already share one exchange of
+    the bands) and appended to the list; the
     caller unpersists after materializing — `lsh_cache()` scopes that in
     one line. A bare call (cache_handle=None) does NOT persist: it
     recomputes the bands per consumer rather than leak a cache entry that
@@ -218,28 +220,32 @@ def _bucket_pairs(
       ceil(n/shard_rows) join tasks (probe side hashed to a shard, build
       side replicated to every shard — candidate set provably unchanged).
     """
-    cnt = (
-        b.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > 1)  # singleton buckets can't pair — drop early
-    )
+    from pyspark.sql.window import Window
+
+    # ONE exchange of the bands feeds the bucket sizes AND both join sides:
+    # the window attaches each row's bucket size, both sides branch from the
+    # windowed frame (ReuseExchange serves them from one shuffle), and the
+    # un-sharded join reuses its (band, band_key) partitioning outright. A
+    # separate count aggregate would re-run the bands' whole upstream
+    # (shingle explode + signature) map stage, because the join sides'
+    # inferred isnotnull(id) filters keep the two subtrees from matching.
+    sized = b.withColumn(
+        "_bn", F.count(F.lit(1)).over(Window.partitionBy("band", "band_key"))
+    ).filter(F.col("_bn") > 1)  # singleton buckets can't pair — drop early
     if max_bucket:
-        cnt = cnt.filter(F.col("_bn") <= max_bucket)
-    cnt = cnt.select(
+        sized = sized.filter(F.col("_bn") <= max_bucket)
+    sized = sized.select(
         "band",
         "band_key",
+        "id",
         (
             F.ceil(F.col("_bn") / F.lit(float(shard_rows))).cast("int")
             if shard_rows
             else F.lit(1)
         ).alias("_nsh"),
     )
-    # inner join against the kept-buckets table applies the cap, the
-    # singleton drop, and the shard count in ONE pass over b
-    l = b.join(cnt, ["band", "band_key"]).select(
-        "band", "band_key", F.col("id").alias("id_l"), "_nsh"
-    )
-    r = b.join(cnt, ["band", "band_key"]).select(
+    l = sized.select("band", "band_key", F.col("id").alias("id_l"), "_nsh")
+    r = sized.select(
         F.col("band").alias("band_r"),
         F.col("band_key").alias("band_key_r"),
         F.col("id").alias("id_r"),

@@ -16,16 +16,25 @@ Spark shape per pass:
     → cutoff filters → pairs(pass_id=k)
 
 then `unionByName` across passes + first-pass-wins dedup via a min-pass
-aggregation on the pair key, and decision columns. The per-pass DataFrames
-share one persisted normalized scan, mirroring the engine's
-one-sequential-read-per-pass contract without re-reading the source.
+aggregation on the pair key, and decision columns; the exact/accepted/
+possible splits and good_pairs are filters of that one frame
+(:class:`MatchResult`).
+
+Scans: ``run_match(persist=True)`` (the default) persists rec/mem, so the
+passes share one cached scan. The repo_linkage paths call it with
+``persist=False`` and hand it a lazily derived frame, so every pass plan
+re-reads the source and re-derives its columns: the batch plan with the
+MinHash canopy holds 12 scans of the input (8 without it), all feeding
+one first_pass_wins. Nothing is cached across the write of ``pairs`` and
+``good_pairs``, which is why the jobs derive ``good_pairs`` from the
+written ``pairs`` table instead of from the lazy result.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigmatch_utilities_spark.config import BlockingPassSpec, MatchConfig
@@ -33,6 +42,7 @@ from bigmatch_utilities_spark.operators.blocking import candidate_pairs
 from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
 
 PAIR_KEY = ["id_rec", "id_mem"]
+GOOD_PAIR_COLS = ["pass_id", "weight", "id_rec", "id_mem"]
 
 
 def normalize(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -491,21 +501,65 @@ class MatchResult:
     rec_*/mem_* match-field values are a per-pass product (score_pass
     output / the checkpoint's per-pass parquet); legacy review emitters
     format those per-pass frames BEFORE the multi-pass union.
+
+    The splits are filters of ``pairs``, which holds one row per pair key
+    (first-pass-wins): ``accept`` is the run's accept rule for emitted
+    non-exact pairs (:func:`threshold_accept`, or the clerical-review
+    override of :func:`apply_manual_accepts`), and every split is one
+    predicate over the same frame, so the union of two splits is itself
+    one filter — Catalyst plans the multi-pass union once, not per split.
     """
 
     pairs: DataFrame        # one row per (id_rec, id_mem), first-pass-wins
-    exact: DataFrame        # is_exact subset (reference *_EXACT.dat)
-    accepted: DataFrame     # auto-match ∪ threshold-accepted possibles
-    possible: DataFrame     # clerical-review set
+    accept: Column          # accept rule for emitted non-exact pairs
 
-    def good_pairs(self) -> DataFrame:
-        """exact ∪ accepted, the reference's …pairs_exact_accpt.dat
-        (app/MatchReview.py:535-586)."""
-        return (
-            self.exact.unionByName(self.accepted)
-            .select("pass_id", "weight", "id_rec", "id_mem")
-            .dropDuplicates(PAIR_KEY)
+    @property
+    def _exact_rule(self) -> Column:
+        return F.col("is_exact") & (F.col("decision") != "below")
+
+    @property
+    def _accepted_rule(self) -> Column:
+        return ~F.col("is_exact") & (F.col("decision") != "below") & self.accept
+
+    @property
+    def exact(self) -> DataFrame:
+        """is_exact subset (reference *_EXACT.dat)."""
+        return self.pairs.filter(self._exact_rule)
+
+    @property
+    def accepted(self) -> DataFrame:
+        """auto-match ∪ threshold-accepted (or user-accepted) possibles."""
+        return self.pairs.filter(self._accepted_rule)
+
+    @property
+    def possible(self) -> DataFrame:
+        """The clerical-review set: possibles the accept rule left out."""
+        return self.pairs.filter(
+            ~F.col("is_exact") & (F.col("decision") == "possible") & ~self.accept
         )
+
+    def good_pairs(self, pairs: DataFrame | None = None) -> DataFrame:
+        """exact ∪ accepted, the reference's …pairs_exact_accpt.dat
+        (app/MatchReview.py:535-586), as ONE filter over ``pairs``.
+
+        Exact and accepted are disjoint filters of a pair-key-unique frame,
+        so the filter with the OR of their predicates is their union with
+        no duplicate to drop. ``pairs`` defaults to this result's; a job
+        that has already written ``pairs`` passes the table it wrote, so
+        writing good_pairs does not recompute the match."""
+        src = self.pairs if pairs is None else pairs
+        return src.filter(self._exact_rule | self._accepted_rule).select(
+            *GOOD_PAIR_COLS
+        )
+
+
+def threshold_accept(accept_threshold: float) -> Column:
+    """The engine's accept rule (app/MatchReview.py:1047): an auto-``match``,
+    or a ``possible`` whose weight reaches the accept threshold."""
+    return (F.col("decision") == "match") | (
+        (F.col("decision") == "possible")
+        & (F.col("weight") >= F.lit(float(accept_threshold)))
+    )
 
 
 def with_accept_flags(
@@ -560,13 +614,7 @@ def apply_manual_accepts(
     final_accept = F.when(
         F.col("accept_usr").isNotNull(), F.col("accept_usr") == 1
     ).otherwise(default_accept)
-    emittable = F.col("decision") != "below"
-    exact = flagged.filter(F.col("is_exact") & emittable)
-    accepted = flagged.filter((~F.col("is_exact")) & emittable & final_accept)
-    possible = flagged.filter(
-        (~F.col("is_exact")) & (F.col("decision") == "possible") & (~final_accept)
-    )
-    return MatchResult(pairs=flagged, exact=exact, accepted=accepted, possible=possible)
+    return MatchResult(pairs=flagged, accept=final_accept)
 
 
 def first_pass_wins(all_pairs: DataFrame) -> DataFrame:
@@ -651,22 +699,6 @@ def run_match(
             *PAIR_KEY, "pass_id", "weight", "is_exact", "decision", *gcols
         )
         core = slim if core is None else core.unionByName(slim)
-    pairs = first_pass_wins(core)
-
-    exact = pairs.filter(F.col("is_exact") & (F.col("decision") != "below"))
-    accepted = pairs.filter(
-        (~F.col("is_exact"))
-        & (
-            (F.col("decision") == "match")
-            | (
-                (F.col("decision") == "possible")
-                & (F.col("weight") >= F.lit(float(config.accept_threshold)))
-            )
-        )
+    return MatchResult(
+        pairs=first_pass_wins(core), accept=threshold_accept(config.accept_threshold)
     )
-    possible = pairs.filter(
-        (~F.col("is_exact"))
-        & (F.col("decision") == "possible")
-        & (F.col("weight") < F.lit(float(config.accept_threshold)))
-    )
-    return MatchResult(pairs=pairs, exact=exact, accepted=accepted, possible=possible)

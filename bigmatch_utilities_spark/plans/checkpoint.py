@@ -41,6 +41,7 @@ from bigmatch_utilities_spark.operators.pipeline import (
     MatchResult,
     first_pass_wins,
     score_pass,
+    threshold_accept,
 )
 
 
@@ -278,21 +279,7 @@ class CheckpointedMatch:
                 *[c for c in df.columns if c.startswith("g_")],
             )
             core = slim if core is None else core.unionByName(slim)
-        pairs = first_pass_wins(core)
-        exact = pairs.filter(F.col("is_exact") & (F.col("decision") != "below"))
-        accepted = pairs.filter(
-            (~F.col("is_exact"))
-            & (
-                (F.col("decision") == "match")
-                | (
-                    (F.col("decision") == "possible")
-                    & (F.col("weight") >= F.lit(float(config.accept_threshold)))
-                )
-            )
+        return MatchResult(
+            pairs=first_pass_wins(core),
+            accept=threshold_accept(config.accept_threshold),
         )
-        possible = pairs.filter(
-            (~F.col("is_exact"))
-            & (F.col("decision") == "possible")
-            & (F.col("weight") < F.lit(float(config.accept_threshold)))
-        )
-        return MatchResult(pairs=pairs, exact=exact, accepted=accepted, possible=possible)

@@ -44,6 +44,7 @@ from bigmatch_utilities_spark.operators.pipeline import (
     first_pass_wins,
     run_match,
     score_pass,
+    threshold_accept,
 )
 
 ID_COL = "record_id"
@@ -310,23 +311,7 @@ def run_repo_linkage(
             )
         )
     )
-    exact = combined.filter(F.col("is_exact") & (F.col("decision") != "below"))
-    accepted = combined.filter(
-        (~F.col("is_exact"))
-        & (
-            (F.col("decision") == "match")
-            | (
-                (F.col("decision") == "possible")
-                & (F.col("weight") >= F.lit(float(cfg.accept_threshold)))
-            )
-        )
-    )
-    possible = combined.filter(
-        (~F.col("is_exact"))
-        & (F.col("decision") == "possible")
-        & (F.col("weight") < F.lit(float(cfg.accept_threshold)))
-    )
-    return MatchResult(pairs=combined, exact=exact, accepted=accepted, possible=possible)
+    return MatchResult(pairs=combined, accept=threshold_accept(cfg.accept_threshold))
 
 
 def run_repo_linkage_delta(
@@ -472,24 +457,9 @@ def run_repo_linkage_delta(
         )
         core = core.unionByName(scored3.select(*core_cols))
 
-    combined = first_pass_wins(core)
-    exact = combined.filter(F.col("is_exact") & (F.col("decision") != "below"))
-    accepted = combined.filter(
-        (~F.col("is_exact"))
-        & (
-            (F.col("decision") == "match")
-            | (
-                (F.col("decision") == "possible")
-                & (F.col("weight") >= F.lit(float(cfg.accept_threshold)))
-            )
-        )
+    return MatchResult(
+        pairs=first_pass_wins(core), accept=threshold_accept(cfg.accept_threshold)
     )
-    possible = combined.filter(
-        (~F.col("is_exact"))
-        & (F.col("decision") == "possible")
-        & (F.col("weight") < F.lit(float(cfg.accept_threshold)))
-    )
-    return MatchResult(pairs=combined, exact=exact, accepted=accepted, possible=possible)
 
 
 def count_candidates(

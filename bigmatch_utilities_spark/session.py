@@ -4,7 +4,16 @@ Defaults chosen for the 100 TB design point, scaled down for local mode:
 AQE on (runtime re-plan + skew-join splitting), Arrow on (every comparator
 UDF crosses the Python boundary in Arrow batches), shuffle partitions sized
 to the local core count (on a real cluster this is set to ~2-3x total cores
-via spark-submit conf, AQE coalesces down).
+via spark-submit conf, AQE coalesces down). PySpark's DataFrame-debugging
+call-site capture is off: it costs about five extra Py4J round trips per
+Column function, and the linkage plans build about a thousand Column
+expressions per job (about 0.9 s of driver time per nightly delta job on
+4 vCPUs); Spark errors still carry the JVM-side plan context. The
+compiled-code cache holds 1000 classes instead of Spark's 100, and the
+generated class names leave out the codegen stage id, so one stage's code
+compiles once wherever it sits in a plan: a nightly delta job generates
+about 190 distinct classes, and with the defaults every repeat of the job
+in a long-lived driver recompiled 50-190 of them (about 1-3 s a job).
 """
 
 from __future__ import annotations
@@ -35,6 +44,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # Shuffle/spill dirs: prefer RAM-backed tmpfs in LOCAL mode only. On a
     # real cluster every executor brings its own local disks, so aggregate

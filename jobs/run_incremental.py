@@ -122,7 +122,13 @@ def main() -> None:
         result.pairs.write.mode("overwrite").partitionBy("pass_id").parquet(
             f"{out}/pairs"
         )
-        result.good_pairs().write.mode("overwrite").parquet(f"{out}/good_pairs")
+        # good_pairs/ filters the pairs/ table just written, not the lazy
+        # result (which would re-run every pass); the schema is given
+        # because an empty partitioned write leaves no file to infer it from
+        written = spark.read.schema(result.pairs.schema).parquet(f"{out}/pairs")
+        result.good_pairs(written).write.mode("overwrite").parquet(
+            f"{out}/good_pairs"
+        )
 
     # ---- stage 2: incremental closure -> clusters/ -------------------------
     if args.resume and _has_success(spark, f"{out}/clusters"):

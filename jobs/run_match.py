@@ -242,7 +242,14 @@ def match_stage(spark: SparkSession, args: argparse.Namespace) -> None:
     result.pairs.write.mode("overwrite").partitionBy("pass_id").parquet(
         f"{args.output}/pairs"
     )
-    result.good_pairs().write.mode("overwrite").parquet(f"{args.output}/good_pairs")
+    # good_pairs/ filters the pairs/ table just written: re-deriving it from
+    # the lazy result would re-run every pass, the canopy and the scorers.
+    # The schema is given because an empty partitioned write leaves no file
+    # to infer it from.
+    written = spark.read.schema(result.pairs.schema).parquet(f"{args.output}/pairs")
+    result.good_pairs(written).write.mode("overwrite").parquet(
+        f"{args.output}/good_pairs"
+    )
 
     if getattr(args, "assign", None):
         from bigmatch_utilities_spark.operators.assignment import (

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import random
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -110,6 +112,43 @@ def test_incremental_no_deltas_touch_nothing(spark):
     e_new = spark.createDataFrame([(1, 1)], "src long, dst long")
     out = incremental_closure(assigns, e_new)
     assert _cc_pairs(out) == _cc_pairs(assigns)
+
+
+def _random_edges(seed: int, n: int, lo: int, hi: int) -> list[tuple[int, int]]:
+    rnd = random.Random(seed)
+    return [(rnd.randrange(lo, hi), rnd.randrange(lo, hi)) for _ in range(n)]
+
+
+_STANDING = [(1, 2), (2, 3), (10, 11), (20, 21), (30, 31)]
+
+
+@pytest.mark.parametrize(
+    "old,new",
+    [
+        # seeded random graphs: new ids 60-79 beyond the standing 0-59,
+        # repeated pairs and self-loops arise by chance
+        *[(_random_edges(s, 50, 0, 60), _random_edges(100 + s, 30, 0, 80)) for s in range(3)],
+        (_STANDING, []),  # empty delta
+        (_STANDING, [(1, 1), (21, 21), (70, 70)]),  # only self-loops
+        (_STANDING, [(3, 10), (10, 3), (3, 10), (11, 2)]),  # duplicate + reversed
+        (_STANDING, [(100, 101), (102, 101), (103, 104)]),  # new ids only
+        (_STANDING, [(50, 2), (50, 11), (21, 50), (50, 31)]),  # one new id bridges four
+        (_STANDING, [(5, 11), (0, 31), (0, 20)]),  # new ids below cluster mins
+    ],
+    ids=[
+        "random0", "random1", "random2", "empty", "self_loops",
+        "dup_reversed", "new_only", "bridge", "below_min",
+    ],
+)
+def test_incremental_matches_recompute(spark, old, new):
+    """The driver fold equals connected_components over old ∪ new, one
+    row per id, on every delta shape the fold special-cases."""
+    e_old = spark.createDataFrame(old, "src long, dst long")
+    e_new = spark.createDataFrame(new, "src long, dst long")
+    inc = incremental_closure(connected_components(e_old), e_new)
+    ids = [r.id for r in inc.select("id").collect()]
+    assert len(ids) == len(set(ids))
+    assert _cc_pairs(inc) == _cc_pairs(connected_components(e_old.unionAll(e_new)))
 
 
 def test_repair_splits_weak_chain(graph):

@@ -86,6 +86,18 @@ def test_incremental_equals_batch(spark, tmp_path, monkeypatch):
     }
     assert got == want
 
+    # good_pairs/ is the accept rule applied to the written pairs/
+    pairs = spark.read.parquet(f"{out}/pairs")
+    accept = (F.col("decision") == "match") | (
+        (F.col("decision") == "possible") & (F.col("weight") >= 4.0)
+    )
+    want = pairs.filter(
+        (F.col("decision") != "below") & (F.col("is_exact") | accept)
+    ).select("pass_id", "weight", "id_rec", "id_mem")
+    good = spark.read.parquet(f"{out}/good_pairs")
+    assert good.count() == good.distinct().count() > 0
+    assert {tuple(r) for r in good.collect()} == {tuple(r) for r in want.collect()}
+
     # every delta-touching pair: at least one endpoint is new
     d_ids = {r[0] for r in delta.select(ID_COL).collect()}
     for r in spark.read.parquet(f"{out}/good_pairs").collect():

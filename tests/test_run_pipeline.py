@@ -251,3 +251,53 @@ def test_run_match_assign_writes_capacitated_assignments(
     per_mem = asg.groupBy("id_mem").count().agg(F.max("count")).collect()[0][0]
     assert per_rec <= 1 and per_mem <= 2
     assert asg.count() > 0
+
+
+def _rows(df) -> set[tuple]:
+    return {tuple(r) for r in df.select("pass_id", "weight", "id_rec", "id_mem").collect()}
+
+
+def test_run_match_good_pairs_is_filter_of_written_pairs(spark, tmp_path, monkeypatch):
+    """good_pairs/ is the accept rule applied to the pairs/ table the job
+    wrote — with the engine's threshold rule, and with clerical-review
+    decisions overriding it."""
+    from bigmatch_utilities_spark.synthdata import repo_files_df
+
+    inp = str(tmp_path / "records")
+    repo_files_df(spark, seed=7, n_clusters=30).write.parquet(inp)
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    rm = _load("run_match")
+    emitted = F.col("decision") != "below"
+
+    def run(out: str, *extra: str):
+        argv = ["run_match.py", "--input", inp, "--output", out, "--no-minhash"]
+        monkeypatch.setattr(sys, "argv", argv + list(extra))
+        rm.main()
+        return spark.read.parquet(f"{out}/pairs"), spark.read.parquet(f"{out}/good_pairs")
+
+    pairs, good = run(str(tmp_path / "out"))
+    accept = (F.col("decision") == "match") | (
+        (F.col("decision") == "possible") & (F.col("weight") >= 4.0)
+    )
+    want = pairs.filter(emitted & (F.col("is_exact") | accept))
+    assert good.count() == len(_rows(good)) > 0
+    assert _rows(good) == _rows(want)
+
+    fuzzy = sorted(
+        (r for r in pairs.collect() if not r.is_exact), key=lambda r: r.weight
+    )
+    low, high = fuzzy[0], fuzzy[-1]
+    dec = str(tmp_path / "decisions")
+    spark.createDataFrame(
+        [(low.id_rec, low.id_mem, True), (high.id_rec, high.id_mem, False)],
+        "id_rec long, id_mem long, accept boolean",
+    ).write.parquet(dec)
+    pairs, good = run(str(tmp_path / "reviewed"), "--decisions", dec)
+    accept = F.when(F.col("accept_usr").isNotNull(), F.col("accept_usr") == 1).otherwise(
+        (F.col("decision") == "match") | (F.col("accept_wgt") == 1)
+    )
+    want = pairs.filter(emitted & (F.col("is_exact") | accept))
+    assert _rows(good) == _rows(want)
+    keys = {(r[2], r[3]) for r in _rows(good)}
+    assert (low.id_rec, low.id_mem) in keys
+    assert (high.id_rec, high.id_mem) not in keys

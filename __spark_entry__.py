@@ -1852,10 +1852,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["rc_repo_containment"] = rc
 
-    # ---- DL1: delta (incremental) linkage — delta-delta ∪ delta-standing --
+    # ---- DL1: delta (incremental) linkage — one delta-touching run --------
     def dl(spark, sf):
-        from dataclasses import replace
-
         from bigmatch_utilities_spark.config import (
             BlockField,
             BlockingPassSpec,
@@ -1881,32 +1879,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             id_field=FieldRef(name="doc_id"),
             dedupe_single_file=True,
         )
-        d = _docs_keyed(spark, sf)
-        delta = d.filter(F.col("doc_id") % 7 == 0)
-        standing = d.filter(F.col("doc_id") % 7 != 0)
-        # the run_repo_linkage_delta decomposition on the generic engine:
-        # delta self-dedupe + delta-vs-standing two-file linkage, disjoint
-        # pair universes, linkage orientation canonicalized to sorted ids
-        r_dd = run_match(delta, None, cfg, id_col="doc_id", persist=False)
-        r_ds = run_match(
-            delta,
-            standing,
-            replace(cfg, dedupe_single_file=False),
-            id_col="doc_id",
-            persist=False,
-        )
-        cols = ["weight", "is_exact", "decision"]
-        dd = r_dd.pairs.select(
-            F.col("id_rec").alias("id_l"), F.col("id_mem").alias("id_r"), *cols
-        )
-        ds = r_ds.pairs.select(
-            F.least("id_rec", "id_mem").alias("id_l"),
-            F.greatest("id_rec", "id_mem").alias("id_r"),
-            *cols,
-        )
-        return dd.unionByName(ds).select(
-            "id_l", "id_r", F.round("weight", 6).alias("weight"),
-            "is_exact", "decision",
+        # the run_repo_linkage_delta shape on the generic engine: one run
+        # over standing ∪ delta with the delta rows flagged, emitting only
+        # the pairs with a delta side (delta-delta and delta-standing),
+        # oriented id_rec < id_mem
+        d = _docs_keyed(spark, sf).withColumn("_in_delta", F.col("doc_id") % 7 == 0)
+        r = run_match(d, None, cfg, id_col="doc_id", persist=False, touching="_in_delta")
+        return r.pairs.select(
+            F.col("id_rec").alias("id_l"),
+            F.col("id_mem").alias("id_r"),
+            F.round("weight", 6).alias("weight"),
+            "is_exact",
+            "decision",
         )
 
     q["dl_delta_linkage"] = dl

@@ -164,6 +164,7 @@ def _self_candidate_pairs(
     star_block_rows: int | None,
     carry_rec: list[str],
     carry_mem: list[str],
+    touching: str | None = None,
 ) -> DataFrame:
     """Self-join candidate generation with ONE window computation.
 
@@ -175,19 +176,42 @@ def _self_candidate_pairs(
     the min-id representative row in one shuffle; both join sides branch
     from the same windowed frame, so Catalyst's ReuseExchange serves them
     from one exchange, and the un-sharded join reuses the window's hash
-    partitioning outright (no re-shuffle)."""
+    partitioning outright (no re-shuffle).
+
+    touching (delta mode, dedupe only): the name of a boolean row flag.
+    The frame is first semi-joined to the block keys of the flagged rows
+    (that key set is broadcast, so the unflagged side is streamed, never
+    shuffled whole), and only those blocks are windowed — whole, so every
+    count, cap and star representative is the batch's. The flagged rows
+    then join every row of their block, and the output is exactly the
+    batch's pairs with at least one flagged side: clique pairs under the
+    same caps, and for blocks over ``star_block_rows`` the min-id star
+    edges that touch a flagged row. Pairs keep the batch orientation
+    (``id_rec < id_mem``, rec_/mem_ values swapped to match)."""
     from pyspark.sql.window import Window
 
     keys = [bf.name for bf in spec.block_fields]
     carry_all = list(dict.fromkeys([*carry_rec, *carry_mem]))
     r0 = apply_blank_flags(df, spec)
+    if touching:
+        hit = r0.filter(F.col(touching)).select(
+            *[F.col(k).alias(f"_hit_{i}") for i, k in enumerate(keys)]
+        )
+        r0 = r0.join(
+            F.broadcast(hit),
+            [F.col(k).eqNullSafe(F.col(f"_hit_{i}")) for i, k in enumerate(keys)],
+            "left_semi",
+        )
     w = Window.partitionBy(*keys)
     # id first in the struct → min(struct) is the min-id row of the block
     packed = F.struct(
         F.col(id_col).alias("_id"),
+        *([F.col(touching).alias("_t")] if touching else []),
         *[F.col(c).alias(f"_c_{c}") for c in carry_all],
     )
-    cols = list(dict.fromkeys([id_col, *keys, *carry_all]))
+    cols = list(
+        dict.fromkeys([id_col, *keys, *carry_all, *([touching] if touching else [])])
+    )
     rw = (
         r0.select(*cols)
         .withColumn("_bn", F.count(F.lit(1)).over(w))
@@ -197,7 +221,10 @@ def _self_candidate_pairs(
     star = None
     if star_block_rows:
         sb = rw.filter(F.col("_bn") > star_block_rows)
-        star = sb.filter(F.col(id_col) != F.col("_rep._id")).select(
+        sb = sb.filter(F.col(id_col) != F.col("_rep._id"))
+        if touching:
+            sb = sb.filter(F.col(touching) | F.col("_rep._t"))
+        star = sb.select(
             F.col("_rep._id").alias("id_rec"),
             F.col(id_col).alias("id_mem"),
             *[F.col(k).alias(f"bk_{k}") for k in keys],
@@ -212,10 +239,14 @@ def _self_candidate_pairs(
             "_nsh", F.ceil(F.col("_bn") / F.lit(float(shard_rows))).cast("int")
         )
 
-    r = rw.select(
+    # delta mode: the flagged rows drive the join, every block row answers
+    # it, and each side carries every field because orientation is decided
+    # per pair below
+    r_carry, m_carry = (carry_all, carry_all) if touching else (carry_rec, carry_mem)
+    r = (rw.filter(F.col(touching)) if touching else rw).select(
         F.col(id_col).alias("id_rec"),
         *[F.col(k).alias(f"bk_{k}") for k in keys],
-        *[F.col(c).alias(f"rec_{c}") for c in carry_rec],
+        *[F.col(c).alias(f"rec_{c}") for c in r_carry],
         *(
             [
                 F.pmod(F.xxhash64(F.col(id_col)), F.col("_nsh"))
@@ -229,7 +260,8 @@ def _self_candidate_pairs(
     m = rw.select(
         F.col(id_col).alias("id_mem"),
         *[F.col(k).alias(f"bk_{k}_m") for k in keys],
-        *[F.col(c).alias(f"mem_{c}") for c in carry_mem],
+        *[F.col(c).alias(f"mem_{c}") for c in m_carry],
+        *([F.col(touching).alias("_t_m")] if touching else []),
         *(
             [F.explode(F.sequence(F.lit(0), F.col("_nsh") - 1)).alias("_shard_m")]
             if shard_rows
@@ -240,7 +272,28 @@ def _self_candidate_pairs(
     if shard_rows:
         cond.append(F.col("_shard") == F.col("_shard_m"))
     joined = r.join(m, on=cond, how="inner")
-    if dedupe:
+    if touching:
+        # a flagged-unflagged pair is met once, from its flagged side; a
+        # flagged-flagged pair twice, so only its smaller id keeps it
+        joined = joined.filter(
+            (F.col("id_rec") != F.col("id_mem"))
+            & (~F.col("_t_m") | (F.col("id_rec") < F.col("id_mem")))
+        )
+        lo = F.col("id_rec") < F.col("id_mem")
+        joined = joined.select(
+            F.least("id_rec", "id_mem").alias("id_rec"),
+            F.greatest("id_rec", "id_mem").alias("id_mem"),
+            *[F.col(f"bk_{k}") for k in keys],
+            *[
+                F.when(lo, F.col(f"rec_{c}")).otherwise(F.col(f"mem_{c}")).alias(f"rec_{c}")
+                for c in carry_rec
+            ],
+            *[
+                F.when(lo, F.col(f"mem_{c}")).otherwise(F.col(f"rec_{c}")).alias(f"mem_{c}")
+                for c in carry_mem
+            ],
+        )
+    elif dedupe:
         joined = joined.filter(F.col("id_rec") < F.col("id_mem"))
     out = joined.drop(
         *[f"bk_{k}_m" for k in keys],
@@ -265,6 +318,7 @@ def candidate_pairs(
     star_block_rows: int | None = None,
     carry_rec: list[str] | None = None,
     carry_mem: list[str] | None = None,
+    touching: str | None = None,
 ) -> DataFrame:
     """One blocking pass → candidate pair DataFrame.
 
@@ -292,6 +346,11 @@ def candidate_pairs(
     (block key, shard) — so a hot block's pair generation and the
     downstream comparator UDFs spread over ceil(n/t) tasks while cold
     blocks pay nothing. Exact join semantics preserved.
+
+    touching: name of a boolean row flag; emit only the pairs with at
+    least one flagged side, exactly as the batch self-join emits them
+    (dedupe self-join only — see `_self_candidate_pairs`). The nightly
+    delta runs every pass this way over standing ∪ delta.
     """
     if any(bf.key_kind != "exact" for bf in spec.block_fields):
         same = rec is mem
@@ -307,7 +366,13 @@ def candidate_pairs(
         raise ValueError("star_block_rows requires a self-join (dedupe) pass")
 
     same_side = rec is mem
-    if same_side and not (salt and salt > 1) and broadcast_mem is not True:
+    windowed = same_side and not (salt and salt > 1) and broadcast_mem is not True
+    if touching and not (windowed and dedupe):
+        raise ValueError(
+            "touching= runs on the windowed dedupe self-join only "
+            "(rec is mem, no salt, no forced broadcast)"
+        )
+    if windowed:
         # the windowed one-shuffle plan (see _self_candidate_pairs);
         # the generic path below remains for two-file runs, explicit
         # uniform salting, and forced-broadcast memory files.
@@ -321,6 +386,7 @@ def candidate_pairs(
             star_block_rows=star_block_rows,
             carry_rec=carry_rec,
             carry_mem=carry_mem,
+            touching=touching,
         )
     r = apply_blank_flags(rec, spec)
 

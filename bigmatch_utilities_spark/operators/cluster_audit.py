@@ -174,6 +174,19 @@ def _long_column(table, name: str) -> np.ndarray:
     return table.column(name).to_numpy().astype(np.int64, copy=False)
 
 
+def _require_integer_columns(df: DataFrame, cols: list[str]) -> None:
+    from pyspark.sql.types import IntegralType
+
+    for c in cols:
+        t = df.schema[c].dataType
+        if not isinstance(t, IntegralType):
+            raise ValueError(
+                f"incremental_closure folds integer ids on the driver; column "
+                f"{c!r} is {t.simpleString()} (cast it, or close the graph with "
+                "connected_components)"
+            )
+
+
 def incremental_closure(
     assignments: DataFrame,
     new_edges: DataFrame,
@@ -186,7 +199,9 @@ def incremental_closure(
     relabeled where clusters merged, plus rows for ids first seen in
     `new_edges`.  cluster_id stays the minimum original member id, so
     output == connected_components(old edges ∪ new edges) exactly.  Ids
-    and labels are integers (int64 on the driver).
+    and labels are integers (int64 on the driver): ``id``, ``cluster_id``,
+    ``src`` and ``dst`` of any other type raise ValueError, naming the
+    column, before any Spark job runs.
 
     Cost model: the closure runs on the CONTRACTED graph (one node per
     touched cluster label), and it runs on the driver: the delta's edges
@@ -207,6 +222,8 @@ def incremental_closure(
     map.  The label map and the rows of new ids are Arrow-built local
     frames, so no scan of them runs through a Python worker.
     """
+    _require_integer_columns(assignments, ["id", "cluster_id"])
+    _require_integer_columns(new_edges, [src, dst])
     spark = assignments.sparkSession
     a = assignments.select("id", "cluster_id")
     edges = (

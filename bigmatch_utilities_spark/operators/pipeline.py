@@ -24,10 +24,16 @@ Scans: ``run_match(persist=True)`` (the default) persists rec/mem, so the
 passes share one cached scan. The repo_linkage paths call it with
 ``persist=False`` and hand it a lazily derived frame, so every pass plan
 re-reads the source and re-derives its columns: the batch plan with the
-MinHash canopy holds 12 scans of the input (8 without it), all feeding
-one first_pass_wins. Nothing is cached across the write of ``pairs`` and
-``good_pairs``, which is why the jobs derive ``good_pairs`` from the
-written ``pairs`` table instead of from the lazy result.
+MinHash canopy holds 12 scans of the input (8 without it). The nightly
+delta (``touching=``) runs the same passes over standing ∪ delta: every
+windowed side reads both tables, each semi-joined to the broadcast block
+keys of the delta's rows (one more read of the delta). Without the canopy
+that plan holds 32 parquet scans, most of them of the small delta — as
+many as the delta self-dedupe plus delta-vs-standing two-file run it
+replaced — but 9 shuffle stages instead of 13 on a generated input.
+Nothing is cached across the write of ``pairs`` and ``good_pairs``, which
+is why the jobs derive ``good_pairs`` from the written ``pairs`` table
+instead of from the lazy result.
 """
 
 from __future__ import annotations
@@ -71,6 +77,7 @@ def pass_candidates(
     shard_rows: int | None = None,
     max_block_rows: int | None = None,
     extra_carry: list[str] | None = None,
+    touching: str | None = None,
 ) -> DataFrame:
     """The pass's candidate pairs exactly as they enter the comparators:
     blocked join output minus suppress_equal-decided pairs. Exposed so
@@ -79,7 +86,15 @@ def pass_candidates(
 
     extra_carry: additional source columns carried to both sides (e.g.
     fields a downstream gamma/EM step reads that this pass does not score).
+
+    touching: name of a boolean row flag — only the pairs with at least
+    one flagged side (equi passes on a dedupe self-join only; see
+    operators.blocking.candidate_pairs).
     """
+    if touching and spec.kind != "equi":
+        raise ValueError(
+            f"touching= is an equi-join mode; kind={spec.kind!r} has none"
+        )
     carry = [mf.name for mf in spec.match_fields]
     for fp in spec.match_field_pairs:
         for f in (fp.name_a, fp.name_b):
@@ -364,6 +379,7 @@ def pass_candidates(
             max_block_rows=max_block_rows,
             carry_rec=carry_sup,
             carry_mem=carry_sup,
+            touching=touching,
         )
     # Suppress pairs an earlier exact pass already decided (spec.suppress_equal)
     # BEFORE any comparator UDF runs — the filter is a JVM predicate on the
@@ -392,6 +408,7 @@ def score_pass(
     shard_rows: int | None = None,
     max_block_rows: int | None = None,
     gamma_fields: tuple | None = None,
+    touching: str | None = None,
 ) -> DataFrame:
     """One blocking pass → scored candidate pairs.
 
@@ -415,6 +432,9 @@ def score_pass(
     table's row count is the field's distinct-value count). Disagreement
     and blank semantics are unchanged, so cutoffs and is_exact read the
     same columns as an unadjusted pass.
+
+    touching: see :func:`pass_candidates`; the TF tables still read all
+    of ``mem``, flagged or not.
     """
     gamma_fields = tuple(gamma_fields or ())
     tf_fields = tuple(mf for mf in spec.match_fields if mf.tf_adjust)
@@ -429,6 +449,7 @@ def score_pass(
         shard_rows=shard_rows,
         max_block_rows=max_block_rows,
         extra_carry=[mf.name for mf in gamma_fields],
+        touching=touching,
     )
     if tf_fields:
         from bigmatch_utilities_spark.operators.tf_adjust import (
@@ -638,7 +659,7 @@ def first_pass_wins(all_pairs: DataFrame) -> DataFrame:
     )
 
 
-def run_match(
+def pass_union(
     rec: DataFrame,
     mem: DataFrame | None,
     config: MatchConfig,
@@ -650,16 +671,12 @@ def run_match(
     max_block_rows: int | None = None,
     persist: bool = True,
     gamma_fields: tuple | None = None,
-) -> MatchResult:
-    """Run every blocking pass and produce the combined decision sets.
-
-    ``mem=None`` (or config.dedupe_single_file) runs single-file dedupe:
-    rec is self-joined with id_rec < id_mem canonicalization.
-
-    gamma_fields: see :func:`score_pass` — the per-pair ``g_<field>``
-    agreement indicators join the decision core through the union, so EM
-    runs off ``result.pairs`` with zero extra scans.
-    """
+    touching: str | None = None,
+) -> DataFrame:
+    """Every blocking pass scored, as one union of the decision core — the
+    input of :func:`first_pass_wins`, handed out so a caller can add pairs
+    of its own (a canopy) before the one aggregate. Arguments as for
+    :func:`run_match`."""
     id_col = id_col or config.id_field.name
     dedupe = mem is None or config.dedupe_single_file
     if mem is None:
@@ -683,6 +700,7 @@ def run_match(
             shard_rows=shard_rows,
             max_block_rows=max_block_rows,
             gamma_fields=gamma_fields,
+            touching=touching,
         )
         for k, spec in enumerate(config.passes)
     ]
@@ -699,6 +717,51 @@ def run_match(
             *PAIR_KEY, "pass_id", "weight", "is_exact", "decision", *gcols
         )
         core = slim if core is None else core.unionByName(slim)
+    return core
+
+
+def run_match(
+    rec: DataFrame,
+    mem: DataFrame | None,
+    config: MatchConfig,
+    id_col: str | None = None,
+    *,
+    broadcast_mem: bool | None = None,
+    salt: int | None = None,
+    shard_rows: int | None = None,
+    max_block_rows: int | None = None,
+    persist: bool = True,
+    gamma_fields: tuple | None = None,
+    touching: str | None = None,
+) -> MatchResult:
+    """Run every blocking pass and produce the combined decision sets.
+
+    ``mem=None`` (or config.dedupe_single_file) runs single-file dedupe:
+    rec is self-joined with id_rec < id_mem canonicalization.
+
+    gamma_fields: see :func:`score_pass` — the per-pair ``g_<field>``
+    agreement indicators join the decision core through the union, so EM
+    runs off ``result.pairs`` with zero extra scans.
+
+    touching: name of a boolean column of ``rec`` (dedupe runs only).
+    Every pass then emits only the pairs with at least one flagged row,
+    exactly as the batch run over all of ``rec`` emits them — the nightly
+    delta's match of the delta against standing ∪ delta in one join per
+    pass (see operators.blocking.candidate_pairs).
+    """
+    core = pass_union(
+        rec,
+        mem,
+        config,
+        id_col,
+        broadcast_mem=broadcast_mem,
+        salt=salt,
+        shard_rows=shard_rows,
+        max_block_rows=max_block_rows,
+        persist=persist,
+        gamma_fields=gamma_fields,
+        touching=touching,
+    )
     return MatchResult(
         pairs=first_pass_wins(core), accept=threshold_accept(config.accept_threshold)
     )

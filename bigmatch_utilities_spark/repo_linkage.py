@@ -42,8 +42,8 @@ from bigmatch_utilities_spark.operators.dedup import minhash_candidates
 from bigmatch_utilities_spark.operators.pipeline import (
     MatchResult,
     first_pass_wins,
+    pass_union,
     run_match,
-    score_pass,
     threshold_accept,
 )
 
@@ -104,10 +104,16 @@ _FUZZY_FIELDS = (
     MatchField(name="tail_64", comparator="uo", m=0.90, u=0.05),
 )
 
+#: Cutoffs of the fuzzy-scored passes: pass 2 and the MinHash canopy.
+_FUZZY_CUTOFF = CutoffSpec(hi=4.0, lo=-100.0)
+
 _HASH_PASS_FIELDS = (
     MatchField(name="n_chars", comparator="q", m=0.95, u=0.05),
     MatchField(name="head_64", comparator="c", m=0.90, u=0.10),
 )
+
+#: Boolean row flag marking the delta's rows in the nightly-delta match.
+DELTA_FLAG = "_in_delta"
 
 
 def repo_match_config(accept_threshold: float = 4.0) -> MatchConfig:
@@ -139,8 +145,8 @@ def repo_match_config(accept_threshold: float = 4.0) -> MatchConfig:
                     BlockField(name="anchor_line"),
                 ),
                 match_fields=_FUZZY_FIELDS,
-                cutoff=CutoffSpec(hi=4.0, lo=-100.0),
-                print_cutoff=CutoffSpec(hi=4.0, lo=-100.0),
+                cutoff=_FUZZY_CUTOFF,
+                print_cutoff=_FUZZY_CUTOFF,
                 # content_sha_nows-equal ⊇ content_sha-equal: every such
                 # pair was found by pass 0 or 1; never JW-score it again.
                 suppress_equal=("content_sha_nows",),
@@ -170,6 +176,89 @@ def with_tf_adjust(cfg: MatchConfig, names: tuple[str, ...]) -> MatchConfig:
             )
             for p in cfg.passes
         ),
+    )
+
+
+def _canopy_pairs(
+    prepared: DataFrame,
+    pass_id: int,
+    *,
+    minhash_max_bucket: int | None,
+    shard_rows: int | None,
+    cache_handle: list | None,
+    gamma_fields: tuple | None = None,
+    touching: str | None = None,
+) -> DataFrame:
+    """The MinHash-LSH canopy pass: band-key candidates over ``prepared``,
+    scored with the fuzzy fields (without TF adjustment) and cut at the
+    fuzzy passes' accept cutoff, as the decision core plus any ``g_*``
+    gamma columns. ``touching`` names a boolean row flag: only candidates
+    with a flagged side are kept (two map-only broadcast joins on the
+    flagged id set)."""
+    # b=4 x r=4 (same 16 hashes as 8x2, sharply lower false-candidate rate:
+    # P(collide) at J=0.3 is 4*0.3^16-ish vs 8*0.3^2 — the candidate volume,
+    # and with it the whole pass-3 cost, drops an order of magnitude while
+    # true near-dups at J>=0.85 still collide with P >= 0.93).
+    cands = minhash_candidates(
+        prepared,
+        "content_norm",
+        ID_COL,
+        shingle_k=3,
+        bands=4,
+        rows_per_band=4,
+        max_bucket=minhash_max_bucket,
+        shard_rows=shard_rows,
+        cache_handle=cache_handle,
+    )
+    if touching:
+        t_ids = prepared.filter(F.col(touching)).select(F.col(ID_COL).alias("_did"))
+        left_hit = cands.join(
+            F.broadcast(t_ids), cands["id_l"] == F.col("_did"), "left_semi"
+        )
+        right_only = cands.join(
+            F.broadcast(t_ids), cands["id_l"] == F.col("_did"), "left_anti"
+        ).join(F.broadcast(t_ids), cands["id_r"] == F.col("_did"), "left_semi")
+        cands = left_hit.unionByName(right_only)
+    carry = [mf.name for mf in _FUZZY_FIELDS]
+    for mf in gamma_fields or ():
+        if mf.name not in carry:
+            carry.append(mf.name)
+    carry = carry + ["content_sha_nows"]
+    side = prepared.select(F.col(ID_COL), *carry)
+    pairs3 = cands.join(
+        side.toDF(*["id_l"] + [f"rec_{c}" for c in carry]), "id_l"
+    ).join(side.toDF(*["id_r"] + [f"mem_{c}" for c in carry]), "id_r")
+    # suppress pairs already decided by the exact passes (see pass-2 note)
+    pairs3 = pairs3.filter(
+        F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
+    ).drop("rec_content_sha_nows", "mem_content_sha_nows")
+    from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
+
+    scored3 = (
+        pairs3.withColumnRenamed("id_l", "id_rec")
+        .withColumnRenamed("id_r", "id_mem")
+        .withColumn("weight", pair_weight(_FUZZY_FIELDS))
+        .withColumn("is_exact", is_exact(_FUZZY_FIELDS))
+        .withColumn("pass_id", F.lit(pass_id))
+        .withColumn(
+            "decision",
+            F.when(F.col("weight") >= _FUZZY_CUTOFF.hi, F.lit("match")).otherwise(
+                F.lit("possible")
+            ),
+        )
+    )
+    gcols = []
+    if gamma_fields:
+        from bigmatch_utilities_spark.operators.em import gamma_column
+
+        for mf in gamma_fields:
+            scored3 = scored3.withColumn(
+                f"g_{mf.name}",
+                gamma_column(mf, F.col(f"rec_{mf.name}"), F.col(f"mem_{mf.name}")),
+            )
+        gcols = [f"g_{mf.name}" for mf in gamma_fields]
+    return scored3.select(
+        "id_rec", "id_mem", "pass_id", "weight", "is_exact", "decision", *gcols
     )
 
 
@@ -213,7 +302,12 @@ def run_repo_linkage(
     gamma_fields: attach per-pair ``g_<field>`` agreement indicators in the
     scoring stage of every pass (incl. the LSH pass) so EM calibration
     reads them straight off ``result.pairs`` — no second scan
-    (operators.pipeline.score_pass)."""
+    (operators.pipeline.score_pass).
+
+    tf_adjust_fields: score these fields with term-frequency adjustment
+    in the equi-join passes. The MinHash canopy (pass 3) scores without
+    TF adjustment whatever this names (ROADMAP item 1 folds the canopy
+    into the config, which fixes it)."""
     prepared = prepare(df)
     if transform is not None:
         prepared = transform(prepared)
@@ -238,79 +332,15 @@ def run_repo_linkage(
         return result
 
     # pass 3: MinHash-LSH canopy scored with the fuzzy fields.
-    lsh_fields = _FUZZY_FIELDS
-    if tf_adjust_fields:
-        from dataclasses import replace as _replace
-
-        lsh_fields = tuple(
-            _replace(mf, tf_adjust=True) if mf.name in tf_adjust_fields else mf
-            for mf in _FUZZY_FIELDS
-        )
-    lsh_pass = BlockingPassSpec(
-        block_fields=(BlockField(name="lang"),),  # formal; join comes from LSH
-        match_fields=lsh_fields,
-        cutoff=CutoffSpec(hi=4.0, lo=-100.0),
-        print_cutoff=CutoffSpec(hi=4.0, lo=-100.0),
-    )
-    # b=4 x r=4 (same 16 hashes as 8x2, sharply lower false-candidate rate:
-    # P(collide) at J=0.3 is 4*0.3^16-ish vs 8*0.3^2 — the candidate volume,
-    # and with it the whole pass-3 cost, drops an order of magnitude while
-    # true near-dups at J>=0.85 still collide with P >= 0.93).
-    cands = minhash_candidates(
+    scored3 = _canopy_pairs(
         prepared,
-        "content_norm",
-        ID_COL,
-        shingle_k=3,
-        bands=4,
-        rows_per_band=4,
-        max_bucket=minhash_max_bucket,
+        len(cfg.passes),
+        minhash_max_bucket=minhash_max_bucket,
         shard_rows=shard_rows,
         cache_handle=cache_handle,
+        gamma_fields=gamma_fields,
     )
-    carry = [mf.name for mf in _FUZZY_FIELDS]
-    for mf in gamma_fields or ():
-        if mf.name not in carry:
-            carry.append(mf.name)
-    carry = carry + ["content_sha_nows"]
-    side = prepared.select(F.col(ID_COL), *carry)
-    pairs3 = cands.join(
-        side.toDF(*["id_l"] + [f"rec_{c}" for c in carry]), "id_l"
-    ).join(side.toDF(*["id_r"] + [f"mem_{c}" for c in carry]), "id_r")
-    # suppress pairs already decided by the exact passes (see pass-2 note)
-    pairs3 = pairs3.filter(
-        F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
-    ).drop("rec_content_sha_nows", "mem_content_sha_nows")
-    from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
-
-    scored3 = (
-        pairs3.withColumnRenamed("id_l", "id_rec")
-        .withColumnRenamed("id_r", "id_mem")
-        .withColumn("weight", pair_weight(_FUZZY_FIELDS))
-        .withColumn("is_exact", is_exact(_FUZZY_FIELDS))
-        .withColumn("pass_id", F.lit(len(cfg.passes)))
-        .withColumn(
-            "decision",
-            F.when(F.col("weight") >= 4.0, F.lit("match")).otherwise(F.lit("possible")),
-        )
-    )
-    gcols = []
-    if gamma_fields:
-        from bigmatch_utilities_spark.operators.em import gamma_column
-
-        for mf in gamma_fields:
-            scored3 = scored3.withColumn(
-                f"g_{mf.name}",
-                gamma_column(mf, F.col(f"rec_{mf.name}"), F.col(f"mem_{mf.name}")),
-            )
-        gcols = [f"g_{mf.name}" for mf in gamma_fields]
-    combined = first_pass_wins(
-        result.pairs.unionByName(
-            scored3.select(
-                "id_rec", "id_mem", "pass_id", "weight", "is_exact", "decision",
-                *gcols,
-            )
-        )
-    )
+    combined = first_pass_wins(result.pairs.unionByName(scored3))
     return MatchResult(pairs=combined, accept=threshold_accept(cfg.accept_threshold))
 
 
@@ -332,131 +362,67 @@ def run_repo_linkage_delta(
     operators/cluster_audit.incremental_closure folds the good pairs into
     the standing assignment).
 
-    Decomposition, exact by construction (ids disjoint by the with_record_id
-    business-key contract):
+    Decomposition: standing ∪ delta is prepared once, its delta rows
+    flagged (:data:`DELTA_FLAG`; ids are disjoint by the with_record_id
+    business-key contract), and every pass runs ONCE over it in delta
+    mode (operators.pipeline.pass_union — run_match's passes before its
+    aggregate — with ``touching=``, operators.blocking.candidate_pairs):
+    per pass, the delta's block keys are broadcast, only the blocks they
+    touch are windowed — whole, so block counts, the ``max_block_rows``
+    cap and the ``star_block_rows`` min-id stars are the batch's — and
+    the delta rows join every row of their block. Each pass therefore
+    emits exactly the batch recompute's pairs with a delta side, oriented
+    ``id_rec < id_mem``, and scores them from the same values: delta-delta
+    and delta-standing pairs come from one join, and TF value-frequency
+    tables read standing ∪ delta, as the batch does. The MinHash canopy
+    (band keys over standing ∪ delta, candidates kept when a side is a
+    delta row) joins the passes' union before ONE first_pass_wins.
 
-    * delta-delta: the ordinary self-dedupe `run_match` over the delta
-      alone — the standing table is never scanned;
-    * delta-standing: the same passes in two-file LINKAGE mode (rec=delta,
-      mem=standing) — BigMatch's rec/mem shape
-      (/root/reference/app/BigMatchParmFile.py REC/MEM file slots); no
-      canonicalization is needed because the id sets are disjoint. Each
-      pass streams the standing table once against the (typically
-      broadcastable — AQE decides from measured size) delta side. TF
-      value-frequency tables keep reading the MEMORY file, i.e. the
-      standing corpus — the statistically right population;
-    * LSH canopy: band keys over standing ∪ delta, candidates filtered to
-      delta-touching pairs with two map-only broadcast semi/anti joins on
-      the delta id set, scored exactly like run_repo_linkage's pass 3.
+    Equivalence contract (pinned by tests/test_delta_linkage.py): this
+    run's good_pairs equal the delta-touching rows of a batch run over
+    standing ∪ delta, so good_pairs(base batch over OLD) ∪ good_pairs(this
+    run), transitively closed, equals the batch recompute — up to one cap
+    caveat, which lies in the base run: an old-old pair in a block or LSH
+    bucket whose size cap the delta crosses (kept by the base run, dropped
+    by the recompute, or a block the delta turns from a clique into a
+    star). The caps exist to drop boilerplate mega-blocks, and the
+    divergence heals at the next full recompute.
 
-    Union + first_pass_wins yields the standard decision sets over the
-    delta-touching pair universe.
-
-    Equivalence contract (pinned by test): good_pairs(base batch over OLD)
-    ∪ good_pairs(this delta run), transitively closed, equals the batch
-    recompute over OLD ∪ delta — with one honest cap-boundary caveat: a
-    delta that pushes an LSH bucket or blocking block past its size cap
-    drops that canopy in the incremental path where the base run may have
-    kept it (and vice versa). The caps exist to drop boilerplate
-    mega-blocks, and the divergence heals at the next full recompute.
-
-    100 TB notes: the standing table is scanned once per equi-join pass
-    and once for band keys — at real scale persist the band keys as a
-    checkpoint table and append the delta's, turning the canopy stage
-    into a delta-vs-bands join. The equi-join passes already prune to the
-    delta's blocking-key values when the standing side is Iceberg
-    (runtime filter / DPP on the partition keys lang, bucket(repo)).
+    100 TB notes: each pass scans the standing table, filtered map-side
+    by the broadcast delta key set before any shuffle, and it is scanned once
+    for band keys — at real scale persist the band keys as a checkpoint
+    table and append the delta's, turning the canopy stage into a
+    delta-vs-bands join. With an Iceberg standing side partitioned on a
+    block key, the key set can also prune partitions (runtime filter /
+    DPP; not exercised by the tests).
     """
-    from dataclasses import replace as _replace
-
-    prep_d = prepare(delta)
-    prep_s = prepare(standing)
+    prep = prepare(
+        with_record_id(standing)
+        .withColumn(DELTA_FLAG, F.lit(False))
+        .unionByName(with_record_id(delta).withColumn(DELTA_FLAG, F.lit(True)))
+    )
     if transform is not None:
-        prep_d = transform(prep_d)
-        prep_s = transform(prep_s)
+        prep = transform(prep)
 
     cfg = repo_match_config()
     if tf_adjust_fields:
         cfg = with_tf_adjust(cfg, tuple(tf_adjust_fields))
-    # star emission is a self-join device; in two-file mode the exact-hash
-    # passes join delta x standing directly — per delta row the fan-out is
-    # the standing block size, bounded by max_block_rows (linear, not
-    # quadratic, in the standing side)
-    cfg_link = _replace(
-        cfg,
-        dedupe_single_file=False,
-        passes=tuple(_replace(p, star_block_rows=None) for p in cfg.passes),
-    )
-
-    r_dd = run_match(
-        prep_d, None, cfg, id_col=ID_COL,
+    core = pass_union(
+        prep, None, cfg, id_col=ID_COL,
         max_block_rows=max_block_rows, shard_rows=shard_rows, persist=False,
+        touching=DELTA_FLAG,
     )
-    r_ds = run_match(
-        prep_d, prep_s, cfg_link, id_col=ID_COL,
-        max_block_rows=max_block_rows, shard_rows=shard_rows, persist=False,
-    )
-    core_cols = ["id_rec", "id_mem", "pass_id", "weight", "is_exact", "decision"]
-    # canonicalize the linkage run's (delta, standing) orientation to
-    # (min id, max id) so first_pass_wins dedupes it against the id-sorted
-    # LSH pairs — every scored field comparator is orientation-symmetric
-    ds_core = r_ds.pairs.select(
-        F.least("id_rec", "id_mem").alias("id_rec"),
-        F.greatest("id_rec", "id_mem").alias("id_mem"),
-        *core_cols[2:],
-    )
-    core = r_dd.pairs.select(*core_cols).unionByName(ds_core)
-
     if use_minhash_pass:
-        prep_all = prep_s.unionByName(prep_d)
-        cands = minhash_candidates(
-            prep_all,
-            "content_norm",
-            ID_COL,
-            shingle_k=3,
-            bands=4,
-            rows_per_band=4,
-            max_bucket=minhash_max_bucket,
-            shard_rows=shard_rows,
-            cache_handle=cache_handle,
-        )
-        # delta-touching only, via two map-only broadcast joins on the
-        # delta id set (old-old canopies belong to the batch path)
-        d_ids = prep_d.select(F.col(ID_COL).alias("_did"))
-        left_hit = cands.join(
-            F.broadcast(d_ids), cands["id_l"] == F.col("_did"), "left_semi"
-        )
-        right_only = cands.join(
-            F.broadcast(d_ids), cands["id_l"] == F.col("_did"), "left_anti"
-        ).join(F.broadcast(d_ids), cands["id_r"] == F.col("_did"), "left_semi")
-        cands = left_hit.unionByName(right_only)
-
-        carry = [mf.name for mf in _FUZZY_FIELDS] + ["content_sha_nows"]
-        side = prep_all.select(F.col(ID_COL), *carry)
-        pairs3 = cands.join(
-            side.toDF(*["id_l"] + [f"rec_{c}" for c in carry]), "id_l"
-        ).join(side.toDF(*["id_r"] + [f"mem_{c}" for c in carry]), "id_r")
-        pairs3 = pairs3.filter(
-            F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
-        ).drop("rec_content_sha_nows", "mem_content_sha_nows")
-        from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
-
-        scored3 = (
-            pairs3.withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
-            .withColumn("weight", pair_weight(_FUZZY_FIELDS))
-            .withColumn("is_exact", is_exact(_FUZZY_FIELDS))
-            .withColumn("pass_id", F.lit(len(cfg.passes)))
-            .filter(F.col("weight") >= F.lit(-100.0))
-            .withColumn(
-                "decision",
-                F.when(F.col("weight") >= 4.0, F.lit("match")).otherwise(
-                    F.lit("possible")
-                ),
+        core = core.unionByName(
+            _canopy_pairs(
+                prep,
+                len(cfg.passes),
+                minhash_max_bucket=minhash_max_bucket,
+                shard_rows=shard_rows,
+                cache_handle=cache_handle,
+                touching=DELTA_FLAG,
             )
         )
-        core = core.unionByName(scored3.select(*core_cols))
-
     return MatchResult(
         pairs=first_pass_wins(core), accept=threshold_accept(cfg.accept_threshold)
     )

@@ -13,8 +13,10 @@ exactly the touched clusters.
 
 Contrast with jobs/run_pipeline.py --base: that job re-MATCHES the whole
 input and only the closure stage is incremental; this one also makes the
-match stage incremental (repo_linkage.run_repo_linkage_delta), so nightly
-cost is O(delta x touched blocks), not O(corpus²). The reference has no
+match stage incremental (repo_linkage.run_repo_linkage_delta: one join
+per pass of the delta against standing ∪ delta, over only the blocks the
+delta's keys touch, and one first_pass_wins), so nightly cost is
+O(delta x touched blocks), not O(corpus²). The reference has no
 incremental mode at all — every BigMatch run re-reads both files
 (/root/reference/app/bigmatch.py drives full runs only).
 
@@ -37,9 +39,12 @@ Outputs under --output:
 --resume skips stages whose terminal output already carries _SUCCESS,
 same contract as run_pipeline.py.
 
-Equivalence: clusters/ is bit-identical to a batch recompute over
-(standing ∪ delta) — pinned by tests/test_run_incremental.py — up to the
-documented LSH/block cap boundary caveat in run_repo_linkage_delta.
+Equivalence: good_pairs/ holds exactly the batch recompute's good pairs
+with a delta side (tests/test_delta_linkage.py), and clusters/ is
+bit-identical to a batch recompute over (standing ∪ delta) — pinned by
+tests/test_run_incremental.py — up to the cap caveat of the base run
+documented in run_repo_linkage_delta (old-old pairs in a block or LSH
+bucket whose size cap the delta crosses).
 """
 
 from __future__ import annotations

@@ -133,7 +133,9 @@ def add_match_args(p: argparse.ArgumentParser) -> None:
         "1995; operators/tf_adjust): agreement on a rare value counts for "
         "more. Frequencies are one groupBy over the memory file per field. "
         "Repeatable; the field must use the exact comparator (validated "
-        "loudly). E.g. --tf-adjust anchor_line on the repo config",
+        "loudly). E.g. --tf-adjust anchor_line on the repo config. The "
+        "MinHash canopy pass scores without TF adjustment whatever this "
+        "names (use --no-minhash for fully TF-adjusted scoring)",
     )
     p.add_argument(
         "--assign",

@@ -151,6 +151,31 @@ def test_incremental_matches_recompute(spark, old, new):
     assert _cc_pairs(inc) == _cc_pairs(connected_components(e_old.unionAll(e_new)))
 
 
+@pytest.mark.parametrize(
+    "bad", ["id", "cluster_id", "src", "dst"], ids=lambda c: f"string_{c}"
+)
+def test_incremental_rejects_non_integer_ids(spark, bad):
+    """String (or any non-integer) ids fail loudly, naming the column,
+    before a Spark job runs: the driver fold casts ids to int64, which
+    would turn numeric strings into longs and fail on the rest."""
+    assigns = spark.createDataFrame([(1, 1), (2, 1)], "id long, cluster_id long")
+    edges = spark.createDataFrame([(2, 3)], "src long, dst long")
+    if bad in assigns.columns:
+        assigns = assigns.withColumn(bad, F.col(bad).cast("string"))
+    else:
+        edges = edges.withColumn(bad, F.col(bad).cast("string"))
+    sc = spark.sparkContext
+    group = f"test_incremental_rejects_{bad}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=f"column '{bad}' is string"):
+            incremental_closure(assigns, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_repair_splits_weak_chain(graph):
     """The chain 10-11-12-13 with a 0.3 bridge is the over-merge case:
     repair at min_weight=1.0 must cut 11-12 and leave the clique and the

@@ -1,8 +1,10 @@
 """Plan-shape guards for the nightly-delta path: incremental_closure runs
 a fixed handful of Spark jobs however the delta's label graph is shaped,
-good_pairs() plans the first-pass-wins aggregate once (one filter of
-the pairs, not a union of two), and a repeat of the delta match in the
-same driver reuses the code the first run compiled."""
+the delta match plans ONE first-pass-wins aggregate (one join per pass
+over standing ∪ delta, canopy included) and good_pairs() adds no second
+copy of it, writing the delta match's good pairs runs a bounded number of
+Spark jobs, and a repeat of the delta match in the same driver reuses the
+code the first run compiled."""
 
 from __future__ import annotations
 
@@ -14,6 +16,11 @@ from pyspark.sql import functions as F
 #: the Arrow collect of the delta edges, the broadcast endpoint lookup
 #: (its broadcast plus its collect) and the count of the returned plan.
 MAX_CLOSURE_JOBS = 8
+
+#: Spark jobs writing the delta match's good pairs may run on the seed-11
+#: fixture (measured: 11; the two-run decomposition it replaced, a delta
+#: self-dedupe plus a delta-vs-standing two-file match, ran 34).
+MAX_DELTA_MATCH_JOBS = 16
 
 #: Classes a repeat of an identical delta match may compile (measured: 0-5
 #: of the ~120-200 its first run built). With Spark's defaults (100-entry
@@ -68,14 +75,42 @@ def test_good_pairs_plans_first_pass_wins_once(spark):
     batch = run_match(prepare(records), None, repo_match_config(), id_col=ID_COL)
     assert _fpw_aggregates(batch.good_pairs()) == 1
 
-    # the delta run nests one first_pass_wins per run_match under its own:
-    # good_pairs must add no second copy of any of them
-    delta = run_repo_linkage_delta(
-        records.filter(F.pmod(F.col(ID_COL), 5) == 0),
-        records.filter(F.pmod(F.col(ID_COL), 5) != 0),
-        use_minhash_pass=False,
-    )
-    assert _fpw_aggregates(delta.good_pairs()) == _fpw_aggregates(delta.pairs) == 3
+    # the delta run aggregates its passes' union (and the canopy's pairs)
+    # once, and good_pairs must add no second copy
+    for minhash in (False, True):
+        delta = run_repo_linkage_delta(
+            records.filter(F.pmod(F.col(ID_COL), 5) == 0),
+            records.filter(F.pmod(F.col(ID_COL), 5) != 0),
+            use_minhash_pass=minhash,
+        )
+        assert _fpw_aggregates(delta.good_pairs()) == _fpw_aggregates(delta.pairs) == 1
+
+
+def _seed11_delta(spark):
+    from bigmatch_utilities_spark.repo_linkage import ID_COL, with_record_id
+    from bigmatch_utilities_spark.synthdata import repo_files_df
+
+    records = with_record_id(repo_files_df(spark, seed=11, n_clusters=30))
+    delta = records.filter(F.pmod(F.col(ID_COL), 7) == 0)
+    standing = records.filter(F.pmod(F.col(ID_COL), 7) != 0)
+    return delta, standing
+
+
+def test_delta_match_runs_few_spark_jobs(spark):
+    from bigmatch_utilities_spark.repo_linkage import run_repo_linkage_delta
+
+    delta, standing = _seed11_delta(spark)
+    sc = spark.sparkContext
+    group = "test_delta_match_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        result = run_repo_linkage_delta(delta, standing, use_minhash_pass=False)
+        result.good_pairs().write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= MAX_DELTA_MATCH_JOBS, f"{len(jobs)} Spark jobs"
 
 
 def _compiled_classes(spark) -> int:
@@ -85,16 +120,9 @@ def _compiled_classes(spark) -> int:
 
 
 def test_repeated_delta_match_reuses_compiled_code(spark):
-    from bigmatch_utilities_spark.repo_linkage import (
-        ID_COL,
-        run_repo_linkage_delta,
-        with_record_id,
-    )
-    from bigmatch_utilities_spark.synthdata import repo_files_df
+    from bigmatch_utilities_spark.repo_linkage import run_repo_linkage_delta
 
-    records = with_record_id(repo_files_df(spark, seed=11, n_clusters=30))
-    delta = records.filter(F.pmod(F.col(ID_COL), 7) == 0)
-    standing = records.filter(F.pmod(F.col(ID_COL), 7) != 0)
+    delta, standing = _seed11_delta(spark)
 
     def run() -> int:
         before = _compiled_classes(spark)
